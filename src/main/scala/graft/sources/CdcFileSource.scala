@@ -1,8 +1,11 @@
 package graft.sources
 
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.util
+import java.util.Optional
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -10,7 +13,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReportsSourceMetrics, SupportsAdmissionControl}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -32,6 +35,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - `maxRecordsPerTrigger` caps each micro-batch (K3 backpressure:
   *    unread lines simply stay in the file, as unread WAL stays in
   *    the slot).
+  *
+  * The tail is O(appended bytes) per trigger: [[WalTail]] scans only
+  * the bytes written since its last scan and keeps a sparse line→byte
+  * index, so a batch's reader seeks near its first line instead of
+  * re-reading the WAL prefix. Lines are numbered exactly as
+  * `Files.lines` numbers them ([[LineCursor]]).
   *
   * A production Postgres source swaps the file tail for a replication
   * connection and keeps every interface here; nothing downstream
@@ -57,27 +66,200 @@ object CdcFileSource {
     StructField("lsn", LongType, nullable = false),
     StructField("data_size", LongType, nullable = false)))
 
-  /** Line count without materializing contents — the admission side
-    * reads this every trigger, so it must stay O(file bytes) scanned
-    * but O(1) held (readAllLines per trigger on an ever-growing WAL
-    * file trends quadratic in total work AND holds the whole file). */
-  def lineCount(path: String): Long = {
-    val p = Paths.get(path)
-    if (!Files.exists(p)) return 0L
-    val s = Files.lines(p, StandardCharsets.UTF_8)
-    try s.count() finally s.close()
-  }
+  /** Bytes per read from the WAL file, for the tail and the reader. */
+  private[graft] val BufferBytes = 64 * 1024
+  /** The tail indexes every line whose number is a multiple of this, so
+    * a reader skips fewer than this many lines to reach its start. */
+  private[graft] val IndexStride = 256
 
-  /** Stream lines [start, end) without materializing the prefix. */
+  /** Lines [start, end) of the WAL at `path`, numbered as by
+    * `Files.lines`, through the reader the source's partitions use.
+    * With no tail index at hand it starts at the file's first byte and
+    * skips `start` lines without decoding them. */
   def lineRange(path: String, start: Long, end: Long)
       : (Iterator[String], AutoCloseable) = {
-    val p = Paths.get(path)
-    if (!Files.exists(p) || end <= start)
-      return (Iterator.empty, () => ())
-    val s = Files.lines(p, StandardCharsets.UTF_8)
-      .skip(start).limit(end - start)
-    (s.iterator().asScala, s)
+    val r = new WalReader(path, 0L, 0L, start, end)
+    (Iterator.continually(r.next()).takeWhile(identity).map(_ => r.text), r)
   }
+}
+
+/** Files.lines' line rule over the raw bytes of a WAL file, read in
+  * chunks: '\n', '\r' and "\r\n" each end a line, and a last line with
+  * no terminator counts once it holds a byte. The rule looks only at
+  * those two ASCII bytes, which UTF-8 never uses inside a multi-byte
+  * character, so a chunk may end anywhere; a '\r' that ends one chunk
+  * still swallows a '\n' that starts the next, and the line state
+  * survives `attach`, so the same holds across scans of a growing
+  * file. [[WalTail]] and [[WalReader]] both scan with this class, so
+  * they cannot number lines differently. */
+private[graft] class LineCursor {
+  /** Lines ended so far: the number of the line being read. */
+  var line = 0L
+  /** File offset of the current line's first byte; -1 until it is read. */
+  var start = -1L
+  private var afterCr = false
+  private val buf = new Array[Byte](CdcFileSource.BufferBytes)
+  private val bb = ByteBuffer.wrap(buf)
+  private var bufAt = 0L // file offset of buf(0)
+  private var i = 0
+  private var lim = 0
+  private var ch: FileChannel = _
+  private var kept = new Array[Byte](256)
+  private var keptLen = 0
+
+  /** File offset of the next byte to read. */
+  def pos: Long = bufAt + i
+
+  /** Lines in the bytes read so far, as `Files.lines` would count them
+    * now: the current line counts once it holds a byte. */
+  def lines: Long = if (start >= 0) line + 1 else line
+
+  /** The bytes kept by the last `endLine(keep = true)`. */
+  def bytes: Array[Byte] = util.Arrays.copyOf(kept, keptLen)
+  def text: String = new String(kept, 0, keptLen, StandardCharsets.UTF_8)
+
+  /** Called once per line, when its first byte is read. */
+  protected def begun(line: Long, at: Long): Unit = ()
+
+  /** Reads on from offset `at` of `ch`, which must be where the bytes
+    * this cursor has seen end. */
+  def attach(ch: FileChannel, at: Long): Unit = {
+    this.ch = ch; bufAt = at; i = 0; lim = 0
+  }
+
+  /** Forgets every byte seen: the next read starts line 0 at offset 0. */
+  protected def rewind(): Unit = {
+    line = 0L; start = -1L; afterCr = false; bufAt = 0L; i = 0; lim = 0
+  }
+
+  /** Reads to the end of the current line. True: a terminator ended it
+    * and `line` has moved past it. False: the file ended first, and the
+    * line stays open for bytes appended later. With `keep`, the line's
+    * bytes so far are in `bytes` either way. */
+  def endLine(keep: Boolean): Boolean = {
+    while (i < lim || fill()) {
+      if (afterCr && buf(i) == '\n') { afterCr = false; i += 1 }
+      else {
+        afterCr = false
+        if (start < 0) { start = bufAt + i; keptLen = 0; begun(line, start) }
+        var j = i
+        while (j < lim && buf(j) != '\n' && buf(j) != '\r') j += 1
+        if (keep) append(i, j)
+        if (j < lim) {
+          afterCr = buf(j) == '\r'
+          i = j + 1; line += 1; start = -1L
+          return true
+        }
+        i = j
+      }
+    }
+    false
+  }
+
+  private def append(from: Int, until: Int): Unit = {
+    val n = until - from
+    if (keptLen + n > kept.length)
+      kept = util.Arrays.copyOf(kept, math.max(kept.length * 2, keptLen + n))
+    System.arraycopy(buf, from, kept, keptLen, n)
+    keptLen += n
+  }
+
+  private def fill(): Boolean = {
+    bufAt += lim; i = 0; lim = 0
+    bb.clear()
+    val n = ch.read(bb, bufAt)
+    if (n > 0) lim = n
+    n > 0
+  }
+}
+
+/** The source's incremental tail of a WAL file that only grows: its
+  * line count, the bytes scanned, the state of the line after the last
+  * terminator, and a line→byte index with one entry every
+  * [[CdcFileSource.IndexStride]] lines. `advance` reads only the bytes
+  * appended since the last call. If the file is now shorter than the
+  * bytes scanned, or the last bytes scanned changed (the file was
+  * rewritten in place), it rescans from byte 0, so the source's
+  * regression guard sees the rewritten file's line count. */
+private[graft] final class WalTail(path: String) extends LineCursor {
+  private val index = new util.TreeMap[java.lang.Long, java.lang.Long]()
+  // the last bytes scanned, re-read on each advance to detect a rewrite
+  private var mark = Array.emptyByteArray
+  /** Bytes read by the last `advance`. */
+  var lastScanBytes = 0L
+
+  override protected def begun(line: Long, at: Long): Unit =
+    if (line % CdcFileSource.IndexStride == 0) index.put(line, at)
+
+  override protected def rewind(): Unit = {
+    super.rewind(); index.clear(); mark = Array.emptyByteArray
+  }
+
+  def advance(): Unit = {
+    val p = Paths.get(path)
+    if (!Files.exists(p)) { rewind(); lastScanBytes = 0L; return }
+    val ch = FileChannel.open(p, StandardOpenOption.READ)
+    try {
+      if (ch.size() < pos ||
+          !util.Arrays.equals(readAt(ch, pos - mark.length, mark.length), mark))
+        rewind()
+      val from = pos
+      attach(ch, from)
+      while (endLine(keep = false)) ()
+      lastScanBytes = pos - from
+      val n = math.min(64L, pos).toInt
+      mark = readAt(ch, pos - n, n)
+    } finally ch.close()
+  }
+
+  private def readAt(ch: FileChannel, at: Long, n: Int): Array[Byte] = {
+    val b = ByteBuffer.allocate(n)
+    while (b.hasRemaining && ch.read(b, at + b.position()) > 0) ()
+    b.array()
+  }
+
+  /** The indexed line at or before `line` and its byte offset; line 0
+    * at byte 0 when none is. */
+  def seekPoint(line: Long): (Long, Long) =
+    Option(index.floorEntry(line)).fold((0L, 0L))(e => (e.getKey, e.getValue))
+
+  /** Drops the entries below the last one at or before `line`: no
+    * later batch of this stream starts before `line`. */
+  def prune(line: Long): Unit =
+    Option(index.floorKey(line)).foreach(k => index.headMap(k).clear())
+}
+
+/** Reads lines [start, end) of the WAL at `path` from byte `fromByte`,
+  * the first byte of line `fromLine` ≤ start: it skips the lines before
+  * `start` without decoding them, and yields at most `end - start`
+  * lines, the last of which may be unterminated. */
+private[graft] final class WalReader(path: String, fromLine: Long,
+    fromByte: Long, start: Long, end: Long) extends AutoCloseable {
+  private val cur = new LineCursor
+  private val ch =
+    if (end <= start || !Files.exists(Paths.get(path))) null
+    else FileChannel.open(Paths.get(path), StandardOpenOption.READ)
+  private var done = ch == null
+  /** LSN of the current line. */
+  var lsn = -1L
+  if (ch != null) { cur.line = fromLine; cur.attach(ch, fromByte) }
+
+  /** Moves to the next line of the range; false past its last line. */
+  def next(): Boolean = {
+    while (!done && cur.line < end) {
+      val n = cur.line
+      if (!cur.endLine(keep = n >= start)) {
+        done = true // end of file: an open line with a byte is the last
+        if (cur.start >= 0 && n >= start) { lsn = n; return true }
+      } else if (n >= start) { lsn = n; return true }
+    }
+    false
+  }
+
+  def bytes: Array[Byte] = cur.bytes
+  def text: String = cur.text
+
+  override def close(): Unit = if (ch != null) ch.close()
 }
 
 class CdcFileTable(path: String, maxPerTrigger: Long,
@@ -102,14 +284,17 @@ case class LsnOffset(lsn: Long) extends Offset {
 
 class CdcFileMicroBatchStream(path: String, maxPerTrigger: Long,
     peek: Boolean = false)
-    extends MicroBatchStream {
-  // Tracks the last offset this stream has *planned*, so each trigger
-  // admits at most maxPerTrigger new lines even while the file grows.
+    extends MicroBatchStream with SupportsAdmissionControl
+    with ReportsSourceMetrics {
+  // The last offset this stream instance has *planned*: a batch ending
+  // beyond it is a restart's re-plan (planInputPartitions), and it is
+  // the admitted LSN the progress metrics report.
   private var lastPlanned: Long = -1L
   // Highest offset restored from the checkpoint log (deserializeOffset
   // runs during recovery): the engine has durably planned/committed up
   // to here, so the WAL head may NEVER be below it — see guardRegression.
   private var restoredFloor: Long = 0L
+  private val tail = new WalTail(path)
 
   /** Fail-fast on WAL regression (slot recreated / WAL file replaced
     * under a live checkpoint). Without this the source would sit on
@@ -129,9 +314,17 @@ class CdcFileMicroBatchStream(path: String, maxPerTrigger: Long,
 
   override def initialOffset(): Offset = LsnOffset(0L)
 
-  override def latestOffset(): Offset = {
-    val total = CdcFileSource.lineCount(path)
-    val base = if (lastPlanned < 0) 0L else lastPlanned
+  override def latestOffset(): Offset = throw new UnsupportedOperationException(
+    "the engine passes the batch start: latestOffset(start, limit)")
+
+  /** Admits at most maxRecordsPerTrigger lines past `start`, the end of
+    * the last batch. On a restart `start` is the checkpoint's position:
+    * this stream instance has planned nothing yet, and counting from 0
+    * would re-admit lines the checkpoint has already committed. */
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
+    tail.advance()
+    val total = tail.lines
+    val base = start.asInstanceOf[LsnOffset].lsn
     guardRegression(total, math.max(base, restoredFloor))
     // saturating add: base + Long.MaxValue must not wrap negative, or
     // the offset oscillates and the engine schedules empty batches
@@ -147,16 +340,16 @@ class CdcFileMicroBatchStream(path: String, maxPerTrigger: Long,
     val s = start.asInstanceOf[LsnOffset].lsn
     val e = end.asInstanceOf[LsnOffset].lsn
     // Restart-replan of a planned-but-uncommitted batch (e beyond
-    // anything THIS stream instance planned): the WAL must still hold
-    // every line of it. Checked ONLY on that path — in steady state
-    // latestOffset just guarded against the same head, and lineCount
-    // is an O(file-bytes) scan this source must not pay twice per
-    // trigger.
+    // anything THIS stream instance planned): its tail has not scanned
+    // the file yet, and the WAL must still hold every line of the
+    // batch. In steady state latestOffset has just scanned and guarded.
     if (e > lastPlanned) {
-      guardRegression(CdcFileSource.lineCount(path), e)
+      tail.advance()
+      guardRegression(tail.lines, e)
       lastPlanned = e // keep the admission tracker consistent
     }
-    Array(CdcFilePartition(path, s, e))
+    val (line, byte) = tail.seekPoint(s)
+    Array(CdcFilePartition(path, s, e, line, byte))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -170,6 +363,7 @@ class CdcFileMicroBatchStream(path: String, maxPerTrigger: Long,
     * same contract as the reference's post-put send_feedback). */
   override def commit(end: Offset): Unit = {
     val lsn = end.asInstanceOf[LsnOffset].lsn
+    tail.prune(lsn)
     // peek mode (pg_logical_slot_peek_changes parity): consume without
     // acking — the slot's restart pointer never advances, so a later
     // real run replays everything from the same position
@@ -189,29 +383,40 @@ class CdcFileMicroBatchStream(path: String, maxPerTrigger: Long,
     LsnOffset(lsn)
   }
 
+  /** How far behind the WAL the stream is, for
+    * `StreamingQueryProgress.sources(i).metrics`: the head as of the
+    * last scan, the admitted end, their difference, and the bytes that
+    * scan read. */
+  override def metrics(latestConsumedOffset: Optional[Offset])
+      : util.Map[String, String] = {
+    val admitted = math.max(lastPlanned, 0L)
+    Map("walHeadLsn" -> tail.lines, "admittedLsn" -> admitted,
+      "backlogLines" -> math.max(tail.lines - admitted, 0L),
+      "lastScanBytes" -> tail.lastScanBytes)
+      .map { case (k, v) => k -> v.toString }.asJava
+  }
+
   override def stop(): Unit = ()
 }
 
-case class CdcFilePartition(path: String, start: Long, end: Long)
-    extends InputPartition
+/** Lines [start, end); `fromByte` is where line `fromLine` ≤ start
+  * begins, the reader's seek point. */
+case class CdcFilePartition(path: String, start: Long, end: Long,
+    fromLine: Long, fromByte: Long) extends InputPartition
 
 class CdcFileReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[CdcFilePartition]
-    val (it, handle) = CdcFileSource.lineRange(p.path, p.start, p.end)
+    val r = new WalReader(p.path, p.fromLine, p.fromByte, p.start, p.end)
     new PartitionReader[InternalRow] {
-      private var lsn = p.start - 1
-      private var payload: String = _
-      override def next(): Boolean = {
-        if (!it.hasNext) return false
-        payload = it.next(); lsn += 1; true
-      }
-      override def get(): InternalRow =
+      override def next(): Boolean = r.next()
+      override def get(): InternalRow = {
+        val b = r.bytes
         new GenericInternalRow(Array[Any](
-          UTF8String.fromString(payload), lsn,
-          payload.getBytes(StandardCharsets.UTF_8).length.toLong))
-      override def close(): Unit = handle.close()
+          UTF8String.fromBytes(b), r.lsn, b.length.toLong))
+      }
+      override def close(): Unit = r.close()
     }
   }
 }

@@ -32,12 +32,12 @@ trait CdcSourceFixture {
 abstract class CdcSourceContractSpec extends SparkSpec {
   def mkFixture(): CdcSourceFixture
 
-  private def tmpDir(): String =
+  protected def tmpDir(): String =
     Files.createTempDirectory("graft-contract").toString
 
   /** Run to quiescence through foreachBatch, collecting (lsn, payload,
     * data_size) into `sink`; returns query progress row counts. */
-  private def drain(df: DataFrame, ckpt: String,
+  protected def drain(df: DataFrame, ckpt: String,
       sink: scala.collection.mutable.Buffer[(Long, String, Long)])
       : Seq[Long] = {
     val counts = scala.collection.mutable.Buffer.empty[Long]
@@ -178,6 +178,234 @@ class CdcFileSourceContractSpec extends CdcSourceContractSpec {
       Files.write(path, payloads.mkString("", "\n", "\n")
         .getBytes(StandardCharsets.UTF_8),
         StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+  }
+
+  // The file tail scans only appended bytes and seeks each batch's
+  // reader through a sparse line→byte index; these pin its numbering to
+  // Files.lines and its regression guard to the contract above.
+
+  import graft.sources.{CdcFileMicroBatchStream, CdcFilePartition, CdcFileSource, LsnOffset, WalTail}
+  import org.apache.spark.sql.connector.read.streaming.ReadLimit
+  import scala.jdk.CollectionConverters._
+
+  private val B = CdcFileSource.BufferBytes
+  private val Stride = CdcFileSource.IndexStride
+
+  private def newWal(): java.nio.file.Path =
+    Files.createTempDirectory("graft-file-tail").resolve("wal.jsonl")
+  private def write(wal: java.nio.file.Path, s: String): Unit =
+    Files.write(wal, s.getBytes(StandardCharsets.UTF_8),
+      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+  private def filesLines(wal: java.nio.file.Path): Seq[String] = {
+    val s = Files.lines(wal, StandardCharsets.UTF_8)
+    try s.iterator().asScala.toVector finally s.close()
+  }
+  private def fileStream(wal: java.nio.file.Path, maxPerTrigger: Long) =
+    spark.readStream
+      .format(classOf[graft.sources.CdcFileSourceProvider].getName)
+      .option("path", wal.toString)
+      .option("maxRecordsPerTrigger", maxPerTrigger.toString)
+      .load()
+  private def assertIsFilesLines(
+      got: Seq[(Long, String, Long)], want: Seq[String], from: Long): Unit = {
+    val sorted = got.sortBy(_._1)
+    val lsns = sorted.map(_._1)
+    assert(lsns == (from until from + want.size),
+      s"every line exactly once, in LSN order: ${lsns.size} rows for ${want.size} lines, " +
+        s"${lsns.distinct.size} distinct, first mismatch at " +
+        lsns.indices.find(i => lsns(i) != from + i))
+    sorted.map(_._2).zip(want).zipWithIndex.find { case ((g, w), _) => g != w }
+      .foreach { case ((g, w), i) => fail(s"payload of LSN ${from + i}: [$g] != [$w]") }
+    assert(sorted.forall { case (_, p, sz) =>
+      sz == p.getBytes(StandardCharsets.UTF_8).length.toLong })
+  }
+
+  /** Pads with ASCII so the next write starts at byte offset `at`,
+    * ending each padding line with "\n". */
+  private def padTo(wal: java.nio.file.Path, at: Long): Unit = {
+    val gap = at - Files.size(wal)
+    assert(gap >= 2)
+    write(wal, "p" * (gap - 1).toInt + "\n")
+  }
+
+  test("file tail: LSNs and payloads equal Files.lines across CRLF, bare CR, split UTF-8 and an open last line") {
+    val wal = newWal()
+    // short lines with every terminator, empty lines and unicode, past
+    // several index strides
+    write(wal, (0 until 3 * Stride).map { i =>
+      val body = if (i % 17 == 0) "" else s"""{"m":$i,"s":"é€𝄞"}"""
+      body + Seq("\n", "\r\n", "\r")(i % 3)
+    }.mkString)
+    // a 2-byte and a 4-byte character straddling buffer boundaries
+    padTo(wal, B - 3); write(wal, "ab" + "é" + "x\n")
+    padTo(wal, 2L * B - 2); write(wal, "q" + "𝄞" + "y\r\n")
+    // "\r\n" split by a buffer boundary, then a bare '\r' ending a buffer
+    padTo(wal, 3L * B - 3); write(wal, "cr\r\nz\n")
+    padTo(wal, 4L * B - 3); write(wal, "cr\rz\n")
+    write(wal, (0 until Stride).map(i => s"tail$i\n").mkString + "open-end")
+    val first = filesLines(wal)
+    assert(first.last == "open-end")
+    val ckpt = tmpDir() + "/ckpt"
+    val sink = scala.collection.mutable.Buffer.empty[(Long, String, Long)]
+    drain(fileStream(wal, maxPerTrigger = 100), ckpt, sink)
+    assertIsFilesLines(sink.toSeq, first, 0L)
+
+    // each drain resumes the checkpoint under the cap. The open line is
+    // completed (its number is kept, its first part was already
+    // delivered), then a '\r' ends the file and the '\n' that completes
+    // its "\r\n" arrives with the next append
+    write(wal, "-completed\nnext\r")
+    val second = filesLines(wal)
+    sink.clear()
+    drain(fileStream(wal, maxPerTrigger = 100), ckpt, sink)
+    assertIsFilesLines(sink.toSeq, second.drop(first.size), first.size.toLong)
+    write(wal, "\nlast\n")
+    val third = filesLines(wal)
+    assert(third.size == second.size + 1, "the '\\n' belongs to the '\\r' before it")
+    sink.clear()
+    drain(fileStream(wal, maxPerTrigger = 100), ckpt, sink)
+    assertIsFilesLines(sink.toSeq, third.drop(second.size), second.size.toLong)
+
+    // the benchmark's entry point reads through the same reader
+    for ((s, e) <- Seq((0L, 10L), (Stride + 5L, 2L * Stride + 1), (first.size - 3L, third.size + 5L))) {
+      val (it, h) = CdcFileSource.lineRange(wal.toString, s, e)
+      try assert(it.toVector == third.slice(s.toInt, e.toInt)) finally h.close()
+    }
+  }
+
+  test("file tail: line count equals Files.lines under appends split at any byte") {
+    val rnd = new scala.util.Random(7)
+    val pieces = Seq("\n", "\r", "\r\n", "a", "bc", "é", "€", "𝄞", "{\"k\":1}")
+    val wal = newWal()
+    val tail = new WalTail(wal.toString)
+    for (_ <- 0 until 200) {
+      val bytes = Seq.fill(1 + rnd.nextInt(12))(pieces(rnd.nextInt(pieces.size)))
+        .mkString.getBytes(StandardCharsets.UTF_8)
+      // cut anywhere, even inside a character or between '\r' and '\n'
+      val cut = rnd.nextInt(bytes.length + 1)
+      for (part <- Seq(bytes.take(cut), bytes.drop(cut))) {
+        Files.write(wal, part, StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+        tail.advance()
+        assert(tail.lastScanBytes == part.length)
+        // Files.lines rejects a file that ends inside a character
+        if (!new String(Files.readAllBytes(wal), StandardCharsets.UTF_8).contains('\uFFFD'))
+          assert(tail.lines == filesLines(wal).size)
+      }
+    }
+    val (it, h) = CdcFileSource.lineRange(wal.toString, 0L, Long.MaxValue)
+    try assert(it.toVector == filesLines(wal)) finally h.close()
+  }
+
+  test("file tail: appends between triggers arrive exactly once, in LSN order") {
+    val wal = newWal()
+    val sink = scala.collection.mutable.Buffer.empty[(Long, String, Long)]
+    val q = fileStream(wal, maxPerTrigger = 150).writeStream
+      .option("checkpointLocation", tmpDir() + "/ckpt")
+      .trigger(Trigger.ProcessingTime(0))
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        val rows = batch.collect()
+        sink.synchronized {
+          sink ++= rows.map(r => (r.getLong(1), r.getString(0), r.getLong(2)))
+        }
+        ()
+      }
+      .start()
+    try {
+      var n = 0
+      for (round <- 0 until 8) {
+        val k = 40 + round * 37
+        write(wal, (n until n + k).map(i => s"""{"r":$round,"i":$i}""" +
+          (if (i % 5 == 0) "\r\n" else "\n")).mkString)
+        n += k
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    assertIsFilesLines(sink.toSeq, filesLines(wal), 0L)
+  }
+
+  test("file tail: a WAL truncated and regrown past its old size under a live checkpoint fails fast") {
+    val wal = newWal()
+    write(wal, (0 until 10).map(i => s"old$i\n").mkString)
+    val ckpt = tmpDir() + "/ckpt"
+    val sink = scala.collection.mutable.Buffer.empty[(Long, String, Long)]
+    drain(fileStream(wal, Long.MaxValue), ckpt, sink)
+    assert(sink.size == 10)
+    val oldSize = Files.size(wal)
+    val regrown = (0 until 3).map(i => s"new$i-" + "n" * 100)
+    Files.write(wal, regrown.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8),
+      StandardOpenOption.TRUNCATE_EXISTING)
+    assert(Files.size(wal) > oldSize)
+    val e = intercept[Exception](drain(fileStream(wal, Long.MaxValue), ckpt, sink))
+    def causes(t: Throwable): Seq[Throwable] =
+      if (t == null) Seq.empty else t +: causes(t.getCause)
+    assert(causes(e).exists(c => Option(c.getMessage).exists(_.contains("regressed"))),
+      s"got: $e")
+    assert(sink.size == 10)
+
+    // a running tail sees the rewrite too: it rescans from byte 0
+    val tail = new WalTail(wal.toString)
+    tail.advance()
+    assert(tail.lines == 3)
+    Files.write(wal, (0 until 2).map(i => s"again$i-" + "a" * 200)
+      .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8),
+      StandardOpenOption.TRUNCATE_EXISTING)
+    tail.advance()
+    assert(tail.lines == 2 && tail.lastScanBytes == Files.size(wal))
+  }
+
+  test("file tail: a fresh stream re-plans a planned-but-uncommitted batch from an empty index") {
+    val wal = newWal()
+    write(wal, (0 until 1000).map(i => s"""{"i":$i}""" + (if (i % 3 == 0) "\r\n" else "\n")).mkString)
+    val want = filesLines(wal)
+    // the crash path: the offset log holds batch [300, 900), the new
+    // stream instance has planned nothing
+    val stream = new CdcFileMicroBatchStream(wal.toString, Long.MaxValue)
+    stream.deserializeOffset("""{"lsn":900}""")
+    val Array(part: CdcFilePartition) =
+      stream.planInputPartitions(LsnOffset(300L), LsnOffset(900L))
+    assert(part.fromLine == Stride && part.fromByte > 0, "the reader seeks")
+    val reader = stream.createReaderFactory().createReader(part)
+    val got = scala.collection.mutable.Buffer.empty[(Long, String)]
+    try while (reader.next()) {
+      val r = reader.get(); got += ((r.getLong(1), r.getUTF8String(0).toString))
+    } finally reader.close()
+    assert(got.toSeq == (300 until 900).map(i => (i.toLong, want(i))))
+    // the index keeps only what a later batch can start from
+    stream.commit(LsnOffset(900L))
+    assert(stream.latestOffset(LsnOffset(900L), ReadLimit.allAvailable()) == LsnOffset(1000L))
+    val Array(next: CdcFilePartition) =
+      stream.planInputPartitions(LsnOffset(900L), LsnOffset(1000L))
+    assert(next.fromLine == 3 * Stride)
+    // entries below it are gone: an older start would read from byte 0
+    val Array(old: CdcFilePartition) =
+      stream.planInputPartitions(LsnOffset(300L), LsnOffset(900L))
+    assert(old.fromLine == 0L && old.fromByte == 0L)
+    val fresh = new CdcFileMicroBatchStream(wal.toString, Long.MaxValue)
+    val e = intercept[IllegalStateException](
+      fresh.planInputPartitions(LsnOffset(900L), LsnOffset(1001L)))
+    assert(e.getMessage.contains("regressed"))
+  }
+
+  test("file source reports its tail position in StreamingQueryProgress") {
+    val wal = newWal()
+    write(wal, (0 until 20).map(i => s"m$i\n").mkString)
+    val q = fileStream(wal, maxPerTrigger = 7).writeStream
+      .option("checkpointLocation", tmpDir() + "/ckpt")
+      .format("noop")
+      .trigger(Trigger.ProcessingTime(0))
+      .start()
+    try {
+      q.processAllAvailable()
+      val ms = q.recentProgress.filter(_.numInputRows > 0)
+        .map(_.sources(0).metrics.asScala.toMap)
+      def col(k: String): Seq[Long] = ms.map(_(k).toLong).toSeq
+      assert(col("admittedLsn") == Seq(7L, 14L, 20L))
+      assert(col("walHeadLsn") == Seq(20L, 20L, 20L))
+      assert(col("backlogLines") == Seq(13L, 6L, 0L))
+      assert(col("lastScanBytes") == Seq(Files.size(wal), 0L, 0L))
+      val last = q.lastProgress.sources(0).metrics.asScala
+      assert(last("walHeadLsn") == "20" && last("backlogLines") == "0")
+    } finally q.stop()
   }
 }
 
